@@ -44,18 +44,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *     BigDecimal — long-max 9.2e18 unscaled is far below the first
   *     DECIMAL(28,9)-checkable magnitude, so no check is reachable in
   *     the long regime);
-  *   - a NULL term (null element, zip_with length padding) absorbs:
-  *     the HOF fold keeps NULL to the end, so the kernel returns NULL
-  *     as soon as one occurs — ANSI does not change null propagation;
+  *   - a NULL term (null element, zip_with length padding, or a
+  *     NaN/±Inf term as above) absorbs: the HOF fold keeps NULL to the
+  *     end, so the kernel returns NULL as soon as one occurs;
   *   - result = DECIMAL(28,9) → double via BigDecimal.doubleValue.
+  *
+  * Narrowed under ANSI: the kernel stops at the first absorbing term
+  * (or at a length mismatch) and never looks at the rest, while the
+  * HOF casts every term. A finite overflowing term AFTER an absorbing
+  * one therefore makes the HOF throw where the kernel returns NULL —
+  * e.g. sqDist([NaN, 1e9], [1.0, 0.0]); DecimalFoldSpec pins that
+  * row. With ANSI off both forms return NULL.
+  *
+  * `ansi` defaults to the session's mode when the expression is built
+  * on the driver (the HOF's Cast nodes resolve theirs the same way);
+  * as a constructor field it takes part in equality and survives
+  * `copy`.
   */
 case class DecimalFold(left: Expression, right: Expression,
-    squaredDiff: Boolean) extends BinaryExpression {
-
-  // captured at plan time on the driver (the HOF's Cast nodes resolve
-  // their ANSI mode the same way) and serialized with the expression
-  private val ansi: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get.ansiEnabled
+    squaredDiff: Boolean,
+    ansi: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -106,7 +115,7 @@ object DecimalFold {
 
   /** Shared by interpreted eval and generated code. Returns null (or
     * throws, matching the HOF's ANSI Cast) for every case the HOF form
-    * does (see class doc). */
+    * does, except the narrowed ANSI case in the class doc. */
   def fold(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean,
       squaredDiff: Boolean, ansi: Boolean): java.lang.Double = {
     val n = x.numElements()
@@ -154,39 +163,15 @@ object DecimalFold {
     else accB.doubleValue()
   }
 
-  // session kill-switch (the ScanSpread pattern): lets a same-JVM A/B
-  // measure kernel vs HOF, and a session opt out wholesale
-  private def enabled: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.decimalfold.enabled", "true") == "true"
-
-  private val termDec = org.apache.spark.sql.types.DecimalType(18, 9)
-  private val accDec = org.apache.spark.sql.types.DecimalType(28, 9)
-
-  private def hof(a: Column, b: Column, sq: Boolean): Column = {
-    import org.apache.spark.sql.functions._
-    def term(x: Column, y: Column): Column =
-      if (sq) ((x.cast(DoubleType) - y.cast(DoubleType)) *
-        (x.cast(DoubleType) - y.cast(DoubleType))).cast(termDec)
-      else (x.cast(DoubleType) * y.cast(DoubleType)).cast(termDec)
-    aggregate(
-      zip_with(a, b, term),
-      lit(java.math.BigDecimal.ZERO).cast(accDec),
-      (acc, v) => (acc + v).cast(accDec))
-      .cast(DoubleType)
-  }
-
   /** Exact squared L2 distance: replaces the
     * `aggregate(zip_with(a, b, (x,y) -> CAST((x−y)² AS …)))` form. */
   def sqDist(a: Column, b: Column): Column =
-    if (!enabled) hof(a, b, sq = true)
-    else ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
+    ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
       ColumnBridge.expression(b), squaredDiff = true))
 
   /** Exact dot product: replaces the
     * `aggregate(zip_with(a, b, (x,y) -> CAST(x·y AS …)))` form. */
   def dot(a: Column, b: Column): Column =
-    if (!enabled) hof(a, b, sq = false)
-    else ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
+    ColumnBridge.column(DecimalFold(ColumnBridge.expression(a),
       ColumnBridge.expression(b), squaredDiff = false))
 }

@@ -49,53 +49,39 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, src: String, dst: String,
       nodes: Option[DataFrame] = None, maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-
     // Convergence check: (count, Σ xxhash64(u,v) as decimal) — two
     // scalars per round, never the edge data. A checksum collision
     // between consecutive DIFFERENT edge sets needs equal counts AND an
     // exact 64-bit sum collision (~2⁻⁶⁴) — accepted; the alternative
     // (set-difference) is an extra shuffle per round.
-    // Round 19: the checksum RIDES the checkpoint materialization as
-    // an observe() aggregate instead of running as its own job — one
+    // The checksum RIDES the checkpoint materialization as an
+    // observe() aggregate instead of running as its own job — one
     // action per round instead of two (a CC call was 2·rounds+2 jobs
     // of which half were 10–40 ms checksum re-reads of the cached
     // blocks; at cluster scale the saved job is a full extra pass of
-    // the round's edge set through the scheduler). Same two scalars;
-    // one caveat vs the old exact separate-job aggregate: observe()
-    // metrics are accumulator-backed, and accumulator updates can be
-    // applied more than once under shuffle-map-stage resubmission
-    // (fetch failure) or partial stage retries on a real cluster with
-    // executor loss. The worst realistic effect is a perturbed
-    // (count, sum) pair that fails to MATCH the previous round —
-    // costing one extra (cheap, converged) round — never a silent
-    // false convergence, which would need the perturbed pair to
-    // exactly equal the previous round's. ObserveFusionSpec pins that
-    // the metrics are populated by the checkpoint's own
-    // materialization job; the count==0 degenerate case is guarded
-    // below because an UNPOPULATED metrics row is Row(0, 0) (the
-    // accumulator's initial buffer), not an exception — without the
-    // guard a Spark behavior change would read as instant convergence
-    // and return wrong components silently.
-    // Session kill-switch (A/B rig, the ScanSpread pattern): when
-    // disabled the checksum runs as its own exact aggregate job over
-    // the checkpointed blocks — the pre-r19 form.
-    val observeFused = spark.conf
-      .get("spark.graft.cc.observe.enabled", "true") == "true"
+    // the round's edge set through the scheduler). One caveat vs an
+    // exact separate-job aggregate: observe() metrics are
+    // accumulator-backed, and accumulator updates can be applied more
+    // than once under shuffle-map-stage resubmission (fetch failure)
+    // or partial stage retries on a real cluster with executor loss.
+    // The worst realistic effect is a perturbed (count, sum) pair that
+    // fails to MATCH the previous round — costing one extra (cheap,
+    // converged) round — never a silent false convergence, which would
+    // need the perturbed pair to exactly equal the previous round's.
+    // ObserveFusionSpec pins that the metrics are populated by the
+    // checkpoint's own materialization job; the count==0 degenerate
+    // case is guarded below because an UNPOPULATED metrics row is
+    // Row(0, 0) (the accumulator's initial buffer), not an exception —
+    // without the guard a Spark behavior change would read as instant
+    // convergence and return wrong components silently.
     var obsRound = 0
     def checkpointWithChecksum(df: DataFrame)
         : (DataFrame, (Long, java.math.BigDecimal)) = {
-      val cs = coalesce(
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO)).as("s")
-      if (!observeFused) {
-        val cp = df.localCheckpoint()
-        val row = cp.agg(count(lit(1)).as("n"), cs).head()
-        return (cp, (row.getLong(0), row.getDecimal(1)))
-      }
       obsRound += 1
       val name = s"graft_cc_cs_$obsRound"
-      val obs = df.observe(name, count(lit(1)).as("n"), cs)
+      val obs = df.observe(name, count(lit(1)).as("n"), coalesce(
+        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO)).as("s"))
       val cp = obs.localCheckpoint()
       val row = obs.queryExecution.observedMetrics(name)
       // Degenerate-zero guard: Row(0, 0) is ALSO what an unpopulated
@@ -154,64 +140,18 @@ object ConnectedComponents {
         .distinct()
     }
 
-    // Rounds per checkpoint (experiment knob, default 1): with k > 1,
-    // k rounds build lazily with an observe() between each and ONE
-    // localCheckpoint materializes them all — k× fewer actions, at the
-    // cost of the inner rounds' subtrees appearing multiple times in
-    // the fused plan (the self-union; ReuseExchange collapses the
-    // exchange-rooted copies). Per-round convergence granularity is
-    // preserved: every fused round's (count, checksum) is read from
-    // the one materialization.
-    val fusedRounds = if (!observeFused) 1
-      else math.max(1, spark.conf
-        .get("spark.graft.cc.fusedrounds", "1").toInt)
-    def csAgg = coalesce(
-      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-      lit(java.math.BigDecimal.ZERO)).as("s")
     while (!converged && round < maxRounds) {
-      if (fusedRounds <= 1) {
-        val (ss, cur) = checkpointWithChecksum(oneRound(e))
-        converged = same(cur, prev)
-        prev = cur
-        // ss is materialized (eager checkpoint) and checksummed — the
-        // previous round's blocks can never be read again. Release
-        // them NOW so live storage is one round, not `round` rounds
-        // (the round-10 bench showed orphaned per-round checkpoints
-        // piling up across CC-family queries until a GC trough).
-        CacheOps.releaseCheckpoint(e)
-        e = ss
-        round += 1
-      } else {
-        val k = math.min(fusedRounds, maxRounds - round)
-        var cur = e
-        val names = (1 to k).map { _ =>
-          obsRound += 1
-          val name = s"graft_cc_cs_$obsRound"
-          cur = oneRound(cur)
-            .observe(name, count(lit(1)).as("n"), csAgg)
-          name
-        }
-        val cp = cur.localCheckpoint()
-        val css = names.map { n =>
-          val r = cur.queryExecution.observedMetrics(n)
-          (r.getLong(0), r.getDecimal(1))
-        }
-        // A nonempty edge set can never become empty mid-iteration
-        // (small-star always re-emits the sMins stars), so ANY zero
-        // count here is either a genuinely empty input or an
-        // unpopulated metric (inner CollectMetrics dropped by an
-        // exchange-reuse rewrite) — confirm on the materialized data
-        // rather than mis-converge on Row(0, 0) pairs.
-        if (css.exists(_._1 == 0L))
-          require(cp.isEmpty,
-            "observe() metrics not populated in fused CC rounds")
-        CacheOps.releaseCheckpoint(e)
-        e = cp
-        var p = prev
-        css.foreach { c => if (same(c, p)) converged = true; p = c }
-        prev = css.last
-        round += k
-      }
+      val (ss, cur) = checkpointWithChecksum(oneRound(e))
+      converged = same(cur, prev)
+      prev = cur
+      // ss is materialized (eager checkpoint) and checksummed — the
+      // previous round's blocks can never be read again. Release
+      // them NOW so live storage is one round, not `round` rounds
+      // (the round-10 bench showed orphaned per-round checkpoints
+      // piling up across CC-family queries until a GC trough).
+      CacheOps.releaseCheckpoint(e)
+      e = ss
+      round += 1
     }
     require(converged,
       s"connected components did not converge in $maxRounds rounds")

@@ -61,55 +61,50 @@ object StreamQueries {
     * (q79's dedup state, the Update-mode sinks' one-emission-per-key)
     * are untouched by the layout.
     *
-    * Measured same-JVM (StreamAB, sf0.1/local[32], median of 3): the
-    * fan pays ONLY where the per-doc work is heavy — q282 docGrams
-    * 0.89×, q236 Dsir occurrences 0.90× — and LOSES a fixed ~0.1–0.2 s
+    * Measured same-JVM (sf0.1/local[32], median of 3; per-twin table
+    * in OPTIMIZATION_r20.md §2): the fan pays ONLY where the per-doc
+    * work is heavy — q282 docGrams 0.89×, q236 Dsir occurrences
+    * 0.90× — and LOSES a fixed ~0.1–0.2 s
     * per drain everywhere else (q258 1.28×, q323 1.21×, q302 1.13×,
     * q314 1.11×, q290 1.37×, q112 1.37×, q63 1.08×, q73 1.05×; fan=4
     * loses the same as fan=16, so the cost is per-batch multi-task
     * overhead, not task count). The same decision rule as ScanSpread's
     * call sites: fan out the heavy funnels, never as a blanket layout.
-    * Events twins therefore stay single-file (cap = 1 below). */
+    * Events twins therefore stay single-file (cap = 1 in
+    * [[eventsLanding]]). */
   private def landingFanOut(s: org.apache.spark.sql.SparkSession,
-      cap: Int): Int = {
-    // session override — the same-JVM A/B lever (StreamAB): arms pick
-    // their layout (1 = the old single-file landing) in one session;
-    // each layout keys its own landing dir, so arms never mix. The
-    // override REPLACES the call site's cap (test lever only — above 8
-    // it would split q170's maxFilesPerTrigger=8 drain into several
-    // triggers).
-    val c = s.conf.get("spark.graft.stream.landing.fanout", "")
-      match {
-        case "" => cap
-        case v => v.toInt
-      }
-    math.max(1, math.min(c, s.sparkContext.defaultParallelism))
+      cap: Int): Int =
+    math.min(cap, s.sparkContext.defaultParallelism)
+
+  /** `df` as a landing zone of `landingFanOut(s, cap)` parquet files
+    * in `<tmpdir>/<prefix>-<key>-p<n>`, written once per dataset and
+    * layout: the `-p<n>` tag keeps a relayout from silently reusing a
+    * stale copy. Returns the landing path. */
+  private def landing(s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame, prefix: String, key: String,
+      cap: Int): String = {
+    val n = landingFanOut(s, cap)
+    val landingDir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"$prefix-$key-p$n")
+    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
+      val w = if (n == 1) df.coalesce(1) else df.repartition(n)
+      w.write.mode("overwrite").parquet(landingDir.toString)
+    }
+    landingDir.toString
   }
 
-  /** Shared events landing dir (also read by q170): name carries the
-    * layout tag so a relayout can never silently reuse a stale copy.
-    * Single-file (measured: every events twin is state/lifecycle-bound,
-    * the fan only added per-batch task overhead); the A/B conf can
-    * still raise it to 8 — q170 reads this landing with
-    * maxFilesPerTrigger = 8, so 8 files stay one trigger there. */
-  private def eventsLandingDir(s: org.apache.spark.sql.SparkSession,
-      dir: String): java.io.File = {
-    val n = landingFanOut(s, 1)
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-q53-landing-${datasetKey(dir)}-p$n")
-  }
+  /** Shared events landing (the events twins and q170, whichever runs
+    * first writes it). Single-file: every events twin is
+    * state/lifecycle-bound, the fan only added per-batch task
+    * overhead. */
+  private def eventsLanding(s: org.apache.spark.sql.SparkSession,
+      dir: String, ev: org.apache.spark.sql.DataFrame): String =
+    landing(s, ev, "graft-q53-landing", datasetKey(dir), 1)
 
   private def eventsStream(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val ev = Tables.load(s, dir, "events")
-    val landingDir = eventsLandingDir(s, dir)
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val n = landingFanOut(s, 1)
-      val w = if (n == 1) ev.coalesce(1) else ev.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
-    StreamOps.landingZone(s, landing, ev.schema)
+    StreamOps.landingZone(s, eventsLanding(s, dir, ev), ev.schema)
   }
 
   val qs: Seq[Q] = Seq(
@@ -633,27 +628,21 @@ object StreamQueries {
         FROM est ORDER BY 1""")),
 
     // Real-time continuous aggregate: q166's rollup maintained by a
-    // STREAM — each micro-batch (several parquet files per trigger)
-    // appends to raw and refreshes exactly its event-time span, so
-    // buckets straddling micro-batches are refreshed again by the
-    // last batch that touches them (parquet files are not
-    // time-ordered, so spans overlap arbitrarily — the refresh-from-
-    // full-raw discipline is what makes order irrelevant). Final
-    // rollup hash-matches the straight-from-raw oracle, q166
-    // verbatim.
+    // STREAM — each micro-batch appends to raw and refreshes exactly
+    // its event-time span, so buckets straddling micro-batches are
+    // refreshed again by the last batch that touches them (parquet
+    // files are not time-ordered, so spans overlap arbitrarily — the
+    // refresh-from-full-raw discipline is what makes order
+    // irrelevant). Final rollup hash-matches the straight-from-raw
+    // oracle, q166 verbatim.
     Q("q170_stream_continuous_aggregate",
       (s, dir) => {
         val ev = Tables.load(s, dir, "events")
-        // shared with eventsStream: ≤ 8 files, so maxFilesPerTrigger=8
-        // below still drains in the same number of triggers as the
-        // old single-file layout
-        val landingDir = eventsLandingDir(s, dir)
-        if (!new java.io.File(landingDir, "_SUCCESS").exists())
-          ev.repartition(landingFanOut(s, 8))
-            .write.mode("overwrite").parquet(landingDir.toString)
+        // the single-file landing shared with eventsStream, so
+        // maxFilesPerTrigger=8 below drains it in one trigger
         val stream = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 8)
-          .parquet(landingDir.toString)
+          .parquet(eventsLanding(s, dir, ev))
         val ds = new graft.ingest.IngestDataset(s,
           java.nio.file.Files.createTempDirectory("graft-q170").toString,
           "events_ds")
@@ -1052,22 +1041,13 @@ object StreamQueries {
   )
 
   /** Embeddings landing zone (the documentsStream pattern):
-    * single-file — StreamAB measured the fan a 1.37× LOSS on q290
-    * (its cost is the per-batch broadcast + Update-mode state, not
-    * the scan). */
+    * single-file — the fan measured a 1.37× LOSS on q290 (its cost is
+    * the per-batch broadcast + Update-mode state, not the scan). */
   private def embeddingsStream(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
-    val n = landingFanOut(s, 1)
-    val landingDir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft-q290-landing-${datasetKey(dir, "embeddings")}-p$n")
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val w = if (n == 1) emb.coalesce(1) else emb.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
-    StreamOps.landingZone(s, landing, emb.schema)
+    StreamOps.landingZone(s, landing(s, emb, "graft-q290-landing",
+      datasetKey(dir, "embeddings"), 1), emb.schema)
   }
 
   /** Documents landing zone (the eventsStream pattern): one
@@ -1082,15 +1062,7 @@ object StreamQueries {
   private def documentsStream(s: org.apache.spark.sql.SparkSession,
       dir: String, cap: Int = 1): org.apache.spark.sql.DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val n = landingFanOut(s, cap)
-    val landingDir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft-q236-landing-${datasetKey(dir, "documents")}-p$n")
-    val landing = landingDir.toString
-    if (!new java.io.File(landingDir, "_SUCCESS").exists()) {
-      val w = if (n == 1) docs.coalesce(1) else docs.repartition(n)
-      w.write.mode("overwrite").parquet(landing)
-    }
-    StreamOps.landingZone(s, landing, docs.schema)
+    StreamOps.landingZone(s, landing(s, docs, "graft-q236-landing",
+      datasetKey(dir, "documents"), cap), docs.schema)
   }
 }

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Same-JVM alternating A/B over an arbitrary session conf — the
-  * SpreadAB discipline generalized: runs each named query `reps`× with
-  * the conf at <aValue> and at <bValue>, interleaved, and prints
-  * per-arm medians. Used round 20 for the CC observe-fusion and
-  * fused-rounds adjudications on q235's shape.
+/** The one same-JVM A/B main, for Spark session confs (e.g.
+  * `spark.sql.adaptive.enabled`, `spark.sql.shuffle.partitions`,
+  * `spark.graft.seal.enabled`): runs each named query `reps`× with the
+  * conf at <aValue> and at <bValue>, interleaved after one warm-up per
+  * arm, and prints per-arm medians and their ratio. A code change is
+  * compared commit against commit with `python3 perfbench/run.py`
+  * instead; the engine keeps no code-path switch just for an A/B.
   *
   * `sbt "Test/runMain graft.ConfAB <dir> <q,[q...]> <confKey> <aValue> <bValue> [reps]"`
   */

@@ -137,6 +137,27 @@ class DecimalFoldSpec extends SparkSpec {
       val hd = outcome(a, b, expr(dotHof))
       assert(kd == hd, s"dot outcome $kd != hof $hd on ${a.toSeq}")
     }
+    // the narrowed contract: an absorbing NaN term before an
+    // overflowing one — the kernel stops at the NaN and returns NULL,
+    // the HOF casts the 1e18 term too and throws under ANSI
+    val (a, b) = (Array(Double.NaN, 1e9), Array(1.0, 0.0))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    assert(outcome(a, b, DecimalFold.sqDist(col("a"), col("b")))
+      == Right(null))
+    assert(outcome(a, b, expr(sqHof))
+      == (if (ansi) Left("threw") else Right(null)))
+    assert(outcome(a, b, DecimalFold.dot(col("a"), col("b")))
+      == outcome(a, b, expr(dotHof)))
+  }
+
+  test("ansi is a constructor field: it takes part in equality and survives copy") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val (l, r) = (Literal(1.0), Literal(2.0))
+    val on = DecimalFold(l, r, squaredDiff = true, ansi = true)
+    assert(on != on.copy(ansi = false))
+    assert(on.withNewChildren(Seq(r, l)).asInstanceOf[DecimalFold].ansi)
+    assert(DecimalFold(l, r, squaredDiff = true).ansi ==
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
   }
 
   test("accumulator long→BigDecimal promotion region stays exact") {

@@ -37,6 +37,38 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table("onebatch").count() == ev.count())
   }
 
+  test("q170 and the events twins share one landing whose file count matches its -p tag") {
+    // q170 reads the events twins' shared landing: whichever query
+    // writes it first, the dir's -p<n> tag must count its files
+    val data = Files.createTempDirectory("landing-order").toString
+    Tables.load(spark, sf, "events").write.parquet(s"$data/events.parquet")
+    val prefix = "graft-q53-landing-" +
+      data.replaceAll("[^A-Za-z0-9._-]", "_") + "-"
+    def landings: Seq[java.io.File] =
+      new java.io.File(sys.props("java.io.tmpdir")).listFiles().toSeq
+        .filter(_.getName.startsWith(prefix))
+    def dropLandings(): Unit =
+      landings.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    def buildInOrder(names: String*): Unit = {
+      dropLandings()
+      names.foreach(n => queries.Registry.queries(n)(spark, data).count())
+      val dirs = landings
+      assert(dirs.size == 1, s"expected one events landing, got $dirs")
+      val dir = dirs.head
+      val tag = dir.getName.split("-p").last.toInt
+      val files = dir.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == tag,
+        s"${names.head} first: ${dir.getName} holds $files parquet files")
+    }
+    try {
+      buildInOrder("q170_stream_continuous_aggregate", "q53_stream_bucket_agg")
+      buildInOrder("q53_stream_bucket_agg", "q170_stream_continuous_aggregate")
+    } finally {
+      dropLandings()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
+    }
+  }
+
   test("landing-zone stream + bucketed agg matches the batch result") {
     val dir = landing()
     val ev = Tables.load(spark, sf, "events")
